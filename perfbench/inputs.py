@@ -22,9 +22,9 @@ from bobo_spark.webgen import LANG_PROBS, LANGS, gen_batch, make_vocab, zipf_cdf
 
 # rows per seed window; seeds further apart than this never share rows
 ROW_WINDOW = 1_000_000
-N_BASE = 20_000      # docs in the first build
-N_APPEND = 5_000     # docs in the append build
-N_DELETE = 250       # seeded tombstones over base + append (1%)
+N_BASE = 12_000      # docs in the first build
+N_APPEND = 3_000     # docs in the append build
+N_DELETE = 150       # seeded tombstones over base + append (1%)
 N_BROWSE = 10_000    # rows of the browse table
 # a broad query ORs head terms until their summed df passes this: above
 # the 200k driver-postings gate of the query engine, so broad queries
@@ -33,13 +33,22 @@ BROAD_DF = 250_000
 
 # one block of the search stream: class -> requests per block. The
 # order inside a block is shuffled per seed; the counts are fixed so
-# every seed sends the same class mix.
-SEARCH_BLOCK = {"and": 21, "or": 19, "phrase": 8, "lang_sel": 10,
-                "ts_range": 10, "recency": 10, "matchall": 1, "broad": 1}
-SEARCH_BLOCKS = 20   # generated up front; a run sends what fits its time
+# every seed sends the same class mix. The repo has no query log, so
+# the shares come from its own benchmark, bench.py:
+# - 36 of 40 follow its latency query set (oracle.reference_queryset
+#   called with thirds and sixths): and 1/3, or 1/3, lang_sel 1/6,
+#   ts_range 1/6, with 2-4 terms for and/or and 2 for lang_sel and
+#   ts_range;
+# - phrase, recency, matchall and broad are not in that set. bench.py
+#   times the first three once each among its headline queries, and
+#   has no broad query. Each of the four gets one request per block:
+#   an assumption, not a measured share.
+SEARCH_BLOCK = {"and": 12, "or": 12, "lang_sel": 6, "ts_range": 6,
+                "phrase": 1, "recency": 1, "matchall": 1, "broad": 1}
+SEARCH_BLOCKS = 20   # generated up front; a run sends the first n_blocks
 # query terms per request of each class, cycled over a block's requests
 # (phrases are cut from documents, matchall has no query)
-QUERY_TERMS = {"and": (2, 3), "or": (2, 3, 4), "phrase": (0,),
+QUERY_TERMS = {"and": (2, 3, 4), "or": (2, 3, 4), "phrase": (0,),
                "lang_sel": (2,), "ts_range": (2,), "recency": (2, 3),
                "matchall": (0,), "broad": (2,)}
 BROWSE_BLOCK = {"unfiltered": 1, "select1": 1, "select2": 1, "select3": 1}
@@ -126,7 +135,19 @@ def search_inputs(seed: int) -> dict:
     stream = search_stream(seed, survivors, dfs)
     return {"base": base, "append": append, "deleted": deleted,
             "survivors": survivors, "dfs": dfs, "stream": stream,
+            "fill_term": unused_term(dfs, stream),
             "digest": digest([base, append], [deleted.tolist(), stream])}
+
+
+def unused_term(dfs: Counter, stream: list) -> str:
+    """The rarest indexed term that no request of ``stream`` names: a
+    search for it loads a fresh reader's block cache while its decode
+    cache stays empty for the stream's terms."""
+    used = set()
+    for _, kw in stream:
+        q = kw.get("query")
+        used.update(q.split() if isinstance(q, str) else q or ())
+    return min((t for t in dfs if t not in used), key=lambda t: (dfs[t], t))
 
 
 def search_stream(seed: int, survivors: pd.DataFrame, dfs: Counter) -> list:

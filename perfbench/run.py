@@ -1,6 +1,6 @@
 """Seeded end-to-end benchmark of bobo_spark.
 
-    python3 perfbench/run.py --workload search_mix --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload search_mix --seed 1 --seconds 20 --trace 0
 
 Runs one workload (see BENCHMARK.json and perfbench/README.md) from a
 single process against ``local[N]``, N = the CPUs this process may use.
@@ -131,6 +131,7 @@ def main(argv=None) -> int:
               "input_digest": out and out["digest"],
               "requests": out and out["requests"],
               "p50_ms_by_class": out and out["p50_ms_by_class"],
+              "batch_per_s": out and out.get("batch_per_s"),
               "attempted_by_class": dict(run.attempted),
               "failed_by_class": dict(run.failed),
               "mismatches": run.mismatches[:20], "errors": run.errors[:20],

@@ -31,6 +31,7 @@ def small(monkeypatch):
     monkeypatch.setattr(inputs, "N_BROWSE", 400)
     monkeypatch.setattr(inputs, "SEARCH_BLOCKS", 4)
     monkeypatch.setattr(inputs, "BROWSE_BLOCKS", 4)
+    monkeypatch.setattr(inputs, "BROAD_DF", 5_000)
 
 
 def _frames_equal(a, b) -> bool:
@@ -75,6 +76,15 @@ def test_every_block_has_the_fixed_class_mix(small):
         for cls, _ in stream[b:b + n]:
             counts[cls] = counts.get(cls, 0) + 1
         assert counts == inputs.SEARCH_BLOCK
+
+
+def test_fill_term_is_indexed_and_never_requested(small):
+    a = inputs.search_inputs(5)
+    t = a["fill_term"]
+    assert a["dfs"][t] > 0
+    for _, kw in a["stream"]:
+        q = kw.get("query") or ()
+        assert t not in (q.split() if isinstance(q, str) else q)
 
 
 def test_append_ids_follow_base_ids(small):
@@ -136,12 +146,11 @@ def test_quantile_counts_failures_as_missing_the_limit():
     assert workloads.quantile([1.0, 2.0, float("inf")], 0.9) == float("inf")
 
 
-def test_block_done_stops_before_the_budget(monkeypatch):
-    monkeypatch.setattr(workloads.time, "perf_counter", lambda: 10.0)
-    assert not workloads.block_done(4, 4, 0.0, 5.0)    # two blocks at least
-    assert not workloads.block_done(9, 4, 0.0, 5.0)    # mid-block
-    assert workloads.block_done(8, 4, 0.0, 14.0)       # 10 s + 5 s > 14 s
-    assert not workloads.block_done(8, 4, 0.0, 15.0)   # 10 s + 5 s = 15 s
+def test_n_blocks_follows_the_seconds():
+    assert workloads.n_blocks(15, 2.5, 20) == 6
+    assert workloads.n_blocks(15, 3.0, 60) == 5
+    assert workloads.n_blocks(1, 2.5, 20) == 2      # two blocks at least
+    assert workloads.n_blocks(600, 2.5, 20) == 20   # no more than generated
 
 
 def test_benchmark_json_matches_the_printed_metrics():

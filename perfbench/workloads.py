@@ -8,6 +8,8 @@ class, and the run continues.
 
 from __future__ import annotations
 
+import ctypes
+import gc
 import os
 import statistics
 import time
@@ -22,12 +24,20 @@ from spans import Tracer, check_request_walls, layer_self_seconds
 SEARCH_CLASSES = list(inputs.SEARCH_BLOCK)
 HANDLER_KINDS = {"lang": "simple", "ts_hist": "histogram", "path": "path",
                  "tags": "multi"}
-BATCH = 20              # search_many batch size
-BATCH_PASSES = 2        # passes of the keyword requests through search_many
-COLD_SHARE = 0.55       # share of --seconds for the cold pass of search()
+# A run sends one block per *_BLOCK_S of --seconds, not what fits in
+# the time: a slower host or program then yields as many samples, and
+# in search_mix, where later blocks find more of their terms already
+# decoded, a time-cut stream would also shift p50_ms with the program's
+# speed. On the 4-core reference host a search block takes 2-3.5 s
+# through search() and search_many, a browse block 3-5 s. At
+# --seconds 20 that is 8 search blocks (320 searches; the sample median
+# of 200 spread by ~8% in bootstrap resamples of one run, of 320 by
+# ~5%) and 5 browse blocks.
+SEARCH_BLOCK_S = 2.5
+BROWSE_BLOCK_S = 4.0
 BROWSE_SETUPS = 3
 ORACLE_SAMPLE = 3       # oracle-checked searches per class
-DOCS_PER_SEGMENT = 2_500
+DOCS_PER_SEGMENT = 2_000
 # calls that run Spark jobs from their own thread pools: the build
 # overlaps its doc-table write with the terms pass, the merge overlaps
 # its forward and sections rewrites with the postings rewrite
@@ -120,15 +130,28 @@ def quantile(values, q: float) -> float:
     return float(v[lo] + (v[hi] - v[lo]) * (pos - lo))
 
 
-def block_done(i: int, block: int, t0: float, budget: float) -> bool:
-    """At a block boundary, stop when one more block of the mean length
-    so far would end past ``budget`` seconds: every run sends whole
-    blocks, so every run sends the same class mix. Two blocks at least,
-    so a traced run has a traced and a plain request of every class."""
-    if i < 2 * block or i % block:
-        return False
-    elapsed = time.perf_counter() - t0
-    return elapsed * (1 + block / i) > budget
+def reset_peak_rss() -> None:
+    """Start the driver's peak-RSS window here: free what the input
+    generation left behind, hand it back to the OS, then reset VmHWM
+    (Linux: writing 5 to clear_refs). The peak read later is the
+    program's, on top of the inputs the benchmark still holds."""
+    gc.collect()
+    ctypes.CDLL("libc.so.6").malloc_trim(0)
+    with open("/proc/self/clear_refs", "w") as f:
+        f.write("5")
+
+
+def settle(spark) -> None:
+    """Collect garbage in the driver and the JVM before a timed pass, so
+    the pass does not pay for the litter of the work before it."""
+    gc.collect()
+    spark._jvm.System.gc()
+
+
+def n_blocks(seconds: float, block_s: float, limit: int) -> int:
+    """Blocks a run sends for ``--seconds``: two at least, so a traced
+    run has a traced and a plain request of every class."""
+    return min(limit, max(2, round(seconds / block_s)))
 
 
 def vm_hwm_mb(pid: int) -> float:
@@ -190,13 +213,14 @@ def empty_layer_metrics() -> dict:
         m[f"query.search_ms.{c}"] = 0.0
     for c in SEARCH_CLASSES:
         m[f"query.spark_jobs.{c}"] = 0.0
-    m.update({"query.cold_p50_ms": 0.0, "query.zero_job_share": 0.0,
+    m.update({"query.zero_job_share": 0.0,
               "query.search_many_batch_ms": 0.0,
               "query.search_many_spark_jobs": 0.0, "query.open_ms": 0.0,
               "query.first_search_ms": 0.0, "facets.browse_ms": 0.0,
               "facets.hits_page_ms": 0.0})
     for k in HANDLER_KINDS.values():
         m[f"facets.facet_counts_ms.{k}"] = 0.0
+    m["facets.facet_counts_ms.collect_all"] = 0.0
     m.update({"facets.spark_jobs_per_browse": 0.0, "facets.zero_job_share": 0.0,
               "build.wall_s": 0.0})
     for s in ("terms", "docs", "stats", "postings", "forward"):
@@ -212,13 +236,15 @@ def empty_layer_metrics() -> dict:
     m["catalog.index_bytes_per_input_byte"] = 0.0
     for layer in ("query", "facets", "build", "merge"):
         m[f"{layer}.self_s"] = 0.0
-    m.update({"spark.jvm_peak_rss_mb": 0.0, "trace.overhead_pct": 0.0,
-              "trace.self_time_violations": 0.0})
+    m.update({"spark.jvm_peak_rss_mb": 0.0, "trace.overhead_pct": 0.0})
     return m
 
 
 def finish_trace(run: Run, m: dict) -> None:
-    """Layer self times, overhead and the self-time arithmetic check."""
+    """Layer self times, overhead and the self-time check. Spans run one
+    at a time on one thread, so the check holds by construction; it
+    fails when spans overlap or outlast their parent or the client's
+    own wall time, i.e. when the tracing itself is broken."""
     spans = run.tracer.spans
     for layer, s in layer_self_seconds(spans).items():
         if f"{layer}.self_s" in m:
@@ -229,7 +255,6 @@ def finish_trace(run: Run, m: dict) -> None:
     if ratios:
         m["trace.overhead_pct"] = 100.0 * (statistics.median(ratios) - 1.0)
     bad = check_request_walls(spans, run.walls)
-    m["trace.self_time_violations"] = float(len(bad))
     run.mismatch("trace", [f"request {r}: span self times do not add up "
                            "to its wall time" for r in bad[:5]])
 
@@ -273,14 +298,16 @@ def search_mix(run: Run) -> dict:
                         np.concatenate([inp["base"]["text"],
                                         inp["append"]["text"]])))
     m = empty_layer_metrics()
+    reset_peak_rss()
 
-    def step(cls, name, fn):
-        out = run.attempt(cls, lambda: run.call(name, fn, trace, rid="setup"))
+    def step(cls, name, fn, rid="setup"):
+        out = run.attempt(cls, lambda: run.call(name, fn, trace, rid=rid))
         if out is None:
             raise RuntimeError(f"set-up step {name} failed: {run.errors[-1]}")
         return out
 
-    # ---- set-up: the write side of the index, then a warm reader
+    # ---- set-up: the write side of the index, then a reader whose
+    # block cache the first search loads
     t_setup = time.perf_counter()
     with tr.span("setup", rid="setup"):
         base_snap, m["build.wall_s"] = step(
@@ -319,79 +346,81 @@ def search_mix(run: Run) -> dict:
         m[f"build.stage_s.{s}"] = float(base_snap.stats.get("stage_secs", {}).get(s, 0.0))
     for s in ("dicts", "terms", "stats", "postings", "forward", "meta"):
         m[f"merge.stage_s.{s}"] = float(merged.stats.get("stage_secs", {}).get(s, 0.0))
+    run.phase("setup")
 
-    # ---- cold pass: new requests in whole blocks for COLD_SHARE of the
-    # time; the block-decode cache fills as they go
+    # ---- a second reader for search_many, opened untimed. A search
+    # for a term that no request names loads its block cache, so its
+    # decode cache starts empty, as the first reader's did after set-up
+    fill = SearchRequest(query=[inp["fill_term"]], mode="or", k=10)
+    breader, _ = step("open", "query.IndexReader",
+                      lambda: IndexReader(spark, idx), rid="reopen")
+    step("probe", "query.search", lambda: breader.search(fill), rid="reopen")
+    run.phase("reopen")
+
+    # ---- requests not sent before, in whole blocks. Each block goes
+    # first through search() on the set-up reader, one request at a
+    # time, then as one search_many batch to the second reader. Neither
+    # reader sees the other's requests, so each pays for decoding the
+    # blocks it is first to need, and both metrics are sampled over
+    # the whole measured window rather than one after the other.
+    # Matchall requests stay out of the batches: search_many hands each
+    # one to the same per-request forward scan search() runs, so they
+    # would time Spark job latency, not the batch scorer
     block = sum(inputs.SEARCH_BLOCK.values())
-    cold = []     # (class, request, wall seconds)
-    t0 = time.perf_counter()
-    for i, (cls, kw) in enumerate(inp["stream"]):
-        if block_done(i, block, t0, COLD_SHARE * run.seconds):
-            break
-        req = SearchRequest(k=10, **kw)
-        t1 = time.perf_counter()
-        res = run.attempt(cls, lambda: reader.search(req))
-        cold.append((cls, req, time.perf_counter() - t1 if res is not None
-                     else float("inf")))
-    run.phase("cold")
-
-    # ---- warm pass: the same requests again; p50_ms and the traced
-    # per-class spans come from here
     sent = []     # (class, request, result or None, wall seconds)
+    batched = []  # search_many result per request of sent, or None
+    batches = []  # (requests, seconds) per search_many batch
     seen: Counter = Counter()
-    for i, (cls, req, _) in enumerate(cold):
-        traced = trace and run.trace_turn(cls, seen)
-        t1 = time.perf_counter()
-        if traced:
-            def one(req=req, i=i, cls=cls):
-                with tr.span("request", rid=i, cls=cls):
-                    if req.query is not None:
-                        run.call("query.plan", lambda: reader.plan(req), True)
-                    out, dt = run.call("query.search",
-                                       lambda: reader.search(req), True)
-                run.overhead[cls]["traced"].append(dt)
-                return out
-        else:
-            def one(req=req):
-                return reader.search(req)
-        res = run.attempt(cls, one)
-        wall = time.perf_counter() - t1
-        if traced:
-            run.walls[i] = wall
-        elif trace:
-            run.overhead[cls]["plain"].append(wall)
-        sent.append((cls, req, res, wall if res is not None else float("inf")))
-    run.phase("warm")
-    # ---- the same keyword requests through search_many, fixed batches,
-    # BATCH_PASSES times. matchall requests stay out: search_many hands
-    # each one to the same per-request forward scan search() runs, so
-    # they would time Spark job latency, not the batch scorer
-    keyed = [i for i, (cls, _, _, _) in enumerate(sent) if cls != "matchall"]
-    batch_rates = []
-    batched = [[None] * len(sent) for _ in range(BATCH_PASSES)]
-    for p in range(BATCH_PASSES):
-        for b in range(0, len(keyed), BATCH):
-            idxs = keyed[b:b + BATCH]
-            reqs = [sent[i][1] for i in idxs]
-            traced = trace and (b // BATCH) % 2 == 0
+    settle(spark)
+    n = block * n_blocks(run.seconds, SEARCH_BLOCK_S, inputs.SEARCH_BLOCKS)
+    for b in range(0, n, block):
+        for i in range(b, b + block):
+            cls, kw = inp["stream"][i]
+            req = SearchRequest(k=10, **kw)
+            traced = trace and run.trace_turn(cls, seen)
             t1 = time.perf_counter()
-            outs = run.attempt("batch", lambda: run.call(
-                "query.search_many", lambda: reader.search_many(reqs), traced,
-                rid=f"batch{p}-{b}")[0])
-            if outs is not None:
-                batch_rates.append(len(outs) / (time.perf_counter() - t1))
-            for i, out in zip(idxs, outs or []):
-                batched[p][i] = out
+            if traced:
+                def one(req=req, i=i, cls=cls):
+                    with tr.span("request", rid=i, cls=cls):
+                        if req.query is not None:
+                            run.call("query.plan", lambda: reader.plan(req), True)
+                        out, dt = run.call("query.search",
+                                           lambda: reader.search(req), True)
+                    run.overhead[cls]["traced"].append(dt)
+                    return out
+            else:
+                def one(req=req):
+                    return reader.search(req)
+            res = run.attempt(cls, one)
+            wall = time.perf_counter() - t1
+            if traced:
+                run.walls[i] = wall
+            elif trace:
+                run.overhead[cls]["plain"].append(wall)
+            sent.append((cls, req, res, wall if res is not None else float("inf")))
+        idxs = [i for i in range(b, b + block) if sent[i][0] != "matchall"]
+        reqs = [sent[i][1] for i in idxs]
+        traced = trace and (b // block) % 2 == 0
+        t1 = time.perf_counter()
+        outs = run.attempt("batch", lambda: run.call(
+            "query.search_many", lambda: breader.search_many(reqs), traced,
+            rid=f"batch{b}")[0])
+        if outs is not None:
+            batches.append((len(outs), time.perf_counter() - t1))
+        batched.extend([None] * block)
+        for i, out in zip(idxs, outs or []):
+            batched[i] = out
+    del reader, breader
     rss, jvm_rss = vm_hwm_mb(os.getpid()), jvm_peak_rss_mb(spark)
-    run.phase("batch")
+    run.phase("measure")
 
     # ---- checks, untimed
     gone = set(deleted.tolist())
     for i, (cls, req, res, _) in enumerate(sent):
-        outs = [p[i] for p in batched if p[i] is not None]
-        if res is not None and any(not checks.same_search(o, res) for o in outs):
+        got = batched[i]
+        if res is not None and got is not None and not checks.same_search(got, res):
             run.mismatch("batch", [f"search_many result {i} ({cls}) != search()"])
-        for out in [res] + outs:
+        for out in (res, got):
             if out is not None and set(out.hits["doc_id"].tolist()) & gone:
                 run.mismatch(cls, [f"request {i} returned a deleted doc"])
     survivors = inp["survivors"]
@@ -419,12 +448,14 @@ def search_mix(run: Run) -> dict:
     lat = [w for _, _, _, w in sent]
     e2e = {"setup_s": setup_s,
            "p50_ms": quantile(lat, 0.5) * 1000,
-           # median batch: a seed's few heavy requests (broad ORs,
-           # head-term phrases) land in one or two batches
-           "throughput_per_s": statistics.median(batch_rates) if batch_rates else 0.0,
+           # requests over the batches' summed time: the pooled rate
+           # spread about a third less across seeds than the median of
+           # the per-batch rates, which swing 40-90/s within a run
+           "throughput_per_s": (sum(k for k, _ in batches)
+                                / sum(t for _, t in batches)
+                                if batches else 0.0),
            "driver_peak_rss_mb": rss}
     m["spark.jvm_peak_rss_mb"] = jvm_rss
-    m["query.cold_p50_ms"] = quantile([w for _, _, w in cold], 0.5) * 1000
     if trace:
         spans = tr.spans
         all_search = []
@@ -459,7 +490,8 @@ def search_mix(run: Run) -> dict:
     for f in frames:
         f.unpersist()
     return {"e2e": e2e, "layers": m, "digest": inp["digest"],
-            "requests": len(sent), "p50_ms_by_class": p50_by_class(sent)}
+            "requests": len(sent), "p50_ms_by_class": p50_by_class(sent),
+            "batch_per_s": [round(k / t, 1) for k, t in batches]}
 
 
 # ------------------------------------------------------------ browse_facets
@@ -488,15 +520,15 @@ def browse_facets(run: Run) -> dict:
                              "specs": {"lang": {}, "tags": {}}})
 
     run.phase("inputs")
-    # ---- set-up, repeated: table in Spark memory, browser, first browse
-    setups, df, browser = [], None, None
+    # ---- set-up, repeated: a new browser and its first browse. The
+    # cached table is the benchmark's input and stays off the clock
+    df = spark.createDataFrame(table).persist()
+    df.count()
+    reset_peak_rss()
+    setups = []
     for rep in range(BROWSE_SETUPS):
-        if df is not None:
-            df.unpersist()
         t0 = time.perf_counter()
         with tr.span("setup", rid=f"setup{rep}"):
-            df = spark.createDataFrame(table).persist()
-            df.count()
             handlers = [SimpleFacetHandler("lang"),
                         HistogramFacetHandler("ts_hist", "ts", ts0, ts1, 86_400),
                         PathFacetHandler("path"), MultiValueFacetHandler("tags")]
@@ -518,14 +550,12 @@ def browse_facets(run: Run) -> dict:
             run.mismatch(cls, checks.browse(
                 checks.expected_browse(table, d, ts0, ts1), res))
     run.phase("warmup")
-    # ---- closed loop of browse() calls for --seconds
+    # ---- closed loop of browse() calls, in whole blocks
     sent = []   # (class, request dict, result or None, wall, extras)
-    t0 = time.perf_counter()
-    block = sum(inputs.BROWSE_BLOCK.values())
+    n = sum(inputs.BROWSE_BLOCK.values()) * n_blocks(
+        run.seconds, BROWSE_BLOCK_S, inputs.BROWSE_BLOCKS)
     seen: Counter = Counter()
-    for i, (cls, d) in enumerate(inp["stream"]):
-        if block_done(i, block, t0, run.seconds):
-            break
+    for i, (cls, d) in enumerate(inp["stream"][:n]):
         req = _browse_request(d)
         traced = trace and run.trace_turn(cls, seen)
         extras = {}
@@ -537,8 +567,13 @@ def browse_facets(run: Run) -> dict:
                                        lambda: browser.browse(req), True)
                     run.overhead[cls]["traced"].append(dt)
                     for fld in req.facet_specs:
+                        # browse() always passes its hit frame as base,
+                        # which bypasses the collect-all cache; these
+                        # calls pass none, so unfiltered ones use it
+                        kind = ("collect_all" if cls == "unfiltered"
+                                else HANDLER_KINDS[fld])
                         rows, _ = run.call(
-                            f"facets.facet_counts_df.{HANDLER_KINDS[fld]}",
+                            f"facets.facet_counts_df.{kind}",
                             lambda: browser.facet_counts_df(req, fld).collect(),
                             True)
                         extras[fld] = [(str(r["value"]), int(r["count"]))
@@ -592,7 +627,7 @@ def browse_facets(run: Run) -> dict:
         m["facets.zero_job_share"] = _mean([float(not s["jobs"]) for s in loop])
         durs, _ = _span_stats(spans, "facets.hits_page_df")
         m["facets.hits_page_ms"] = _median_ms(durs)
-        for kind in HANDLER_KINDS.values():
+        for kind in [*HANDLER_KINDS.values(), "collect_all"]:
             durs, _ = _span_stats(spans, f"facets.facet_counts_df.{kind}")
             m[f"facets.facet_counts_ms.{kind}"] = _median_ms(durs)
         finish_trace(run, m)
